@@ -1,0 +1,9 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus, which Spark keeps package-private: listener
+ * counters are read only after every event posted so far was delivered. */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
