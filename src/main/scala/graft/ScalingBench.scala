@@ -9,10 +9,10 @@ import org.apache.spark.sql.SparkSession
  * input).
  *
  * Measures the headline validation job (graft.Bench.validateBench) at ONE
- * core count per JVM — run it twice via tools/run_scaling.sh, which pins
- * the JVM's visible processors (SPARK_GRAFT_JVMPROCS) so the small-N run
- * is a faithful small-node proxy, then computes
- * efficiency = rps(4N) / (4 * rps(N)).
+ * core count per JVM — tools/run_scaling_quiet.py runs it in pairs, one
+ * JVM per arm with the visible processors pinned
+ * (-XX:ActiveProcessorCount) so the small-N run is a faithful small-node
+ * proxy, then computes efficiency = rps(4N) / (4 * rps(N)).
  *
  * Protocol per run: materialized parquet input, one warm-up pass, median
  * of 3 timed passes.

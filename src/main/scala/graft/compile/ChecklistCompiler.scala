@@ -8,10 +8,10 @@ import graft.model._
 
 /**
  * Compiles a [[graft.model.Checklist]] into Catalyst `Column` expressions:
- * per-field tri-state verdicts, a structured violations array, the row-level
- * pass/fail verdict and the reference-format error string — all evaluated in
- * a SINGLE narrow projection (no shuffle, whole-stage-codegen'd, Catalyst
- * CSE dedups the shared field-state subexpressions).
+ * per-field tri-state verdicts and a structured violations array, evaluated
+ * in a SINGLE narrow projection (no shuffle; Catalyst CSE dedups the shared
+ * field-state subexpressions). The row-level pass/fail verdict and the
+ * reference-format error string are read from that array.
  *
  * This replaces the reference's row-at-a-time interpreter
  * (reference: lib/Bio/Metadata/Validator.pm:109-156 outer loop, 200-290 field
@@ -25,18 +25,8 @@ object ChecklistCompiler {
 
   private val ViolSchema = "struct<field:string,rule_id:string,message:string>"
 
-  /** One potential violation: fire condition, identity, clean message, and
-   * the exact reference-padded message fragment used to rebuild the
-   * accumulated row-error string (field messages carry a trailing space,
-   * dependency messages a leading space — reference appends them that way). */
-  final case class Rule(
-      field: String,
-      ruleId: String,
-      cond: Column,
-      message: Column,
-      paddedBefore: String, // literal spacing before the message
-      paddedAfter: String // literal spacing after the message
-  )
+  /** One potential violation: fire condition, identity and message. */
+  final case class Rule(field: String, ruleId: String, cond: Column, message: Column)
 
   final case class Compiled(
       checklist: Checklist,
@@ -45,7 +35,8 @@ object ChecklistCompiler {
       rules: Seq[Rule]
   ) {
 
-    /** array<struct<field,rule_id,message>> in reference emission order. */
+    /** array<struct<field,rule_id,message>> in reference emission order.
+     * The only place a rule condition is evaluated. */
     def violations: Column = {
       val elems = rules.map { r =>
         when(r.cond,
@@ -58,21 +49,26 @@ object ChecklistCompiler {
 
     def passed: Column = size(violations) === 0
 
-    /** Reference-format accumulated error string:
-     * `[errors found on row N] ...` (reference: Validator.pm:136-145 —
-     * messages concatenated with their original padding, then trimmed and
-     * prefixed; inner double-spaces between field- and dependency-level
-     * messages are faithfully preserved). NULL when the row passes. */
-    def errorString(rowNum: Column): Column = {
-      val parts = rules.map { r =>
-        when(r.cond, concat(lit(r.paddedBefore), r.message, lit(r.paddedAfter)))
-          .otherwise(lit(""))
-      }
-      val acc = trim(concat(parts: _*))
-      when(acc =!= "",
-        concat(lit("[errors found on row "), rowNum.cast(StringType), lit("] "), acc))
-    }
+    /** Reference-format accumulated error string of [[violations]]; see
+     * [[ChecklistCompiler.errorString]]. */
+    def errorString(rowNum: Column): Column =
+      ChecklistCompiler.errorString(violations, rowNum)
   }
+
+  /** Reference-format accumulated error string read from a violations
+   * array: `[errors found on row N] ...` (reference: Validator.pm:136-145).
+   * Field-level messages are appended with a trailing space, dependency
+   * messages with a leading one, then the whole is trimmed and prefixed,
+   * so the double space between the last field message and the first
+   * dependency message is kept. NULL when the array is empty. */
+  def errorString(violations: Column, rowNum: Column): Column =
+    aggregate(violations, lit(""),
+      (acc, v) => concat(acc,
+        when(v("rule_id").isin(RuleIds.Required, RuleIds.FieldInvalid),
+          concat(v("message"), lit(" ")))
+          .otherwise(concat(lit(" "), v("message")))),
+      acc => when(acc =!= "", concat(lit("[errors found on row "),
+        rowNum.cast(StringType), lit("] "), trim(acc))))
 
   /** Strip one pair of wrapping double quotes, as the plugin wrapper does
    * before every check (reference: Validator/PluginRole.pm:29,
@@ -226,7 +222,7 @@ object ChecklistCompiler {
         if (f.required && !f.unknownFlag)
           Some(Rule(f.name, RuleIds.Required,
             isEmptyCell(raw(f.name)),
-            lit(s"['${f.name}' is a required field]"), "", " "))
+            lit(s"['${f.name}' is a required field]")))
         else None
       val invalidMsg =
         if (verboseErrors) {
@@ -234,7 +230,7 @@ object ChecklistCompiler {
           s"[value in field '${f.name}' is not valid; field description: '$desc']"
         } else s"[value in field '${f.name}' is not valid]"
       val invalidRule = Rule(f.name, RuleIds.FieldInvalid,
-        st(f.name) === FieldState.Invalid, lit(invalidMsg), "", " ")
+        st(f.name) === FieldState.Invalid, lit(invalidMsg))
       requiredRule.toSeq :+ invalidRule
     }
 
@@ -259,8 +255,7 @@ object ChecklistCompiler {
 
       val guardRule = Rule(g, RuleIds.IfGuardInvalid,
         !guardUnknown && guardNotValid,
-        lit(s"[field '$g' must be valid in order to statisfy a dependency]"),
-        " ", "")
+        lit(s"[field '$g' must be valid in order to statisfy a dependency]"))
 
       def notValid(f: String): Column =
         st(f) === FieldState.Invalid || st(f) === FieldState.Skipped
@@ -268,26 +263,22 @@ object ChecklistCompiler {
       val thenRules = dep.thens.map { t =>
         Rule(t, RuleIds.IfThenInvalid,
           active && guardTrue && notValid(t),
-          lit(s"[field '$t' must be valid if field '$g' is set to true]"),
-          " ", "")
+          lit(s"[field '$t' must be valid if field '$g' is set to true]"))
       }
       val elsePresentRules = dep.elses.map { e =>
         Rule(e, RuleIds.IfElsePresent,
           active && guardTrue && perlTruthy(raw(e)),
-          lit(s"[field '$e' should not be completed if field '$g' is set to true]"),
-          " ", "")
+          lit(s"[field '$e' should not be completed if field '$g' is set to true]"))
       }
       val elseRules = dep.elses.map { e =>
         Rule(e, RuleIds.IfElseInvalid,
           active && !guardTrue && notValid(e),
-          lit(s"[field '$e' must be valid if field '$g' is set to false]"),
-          " ", "")
+          lit(s"[field '$e' must be valid if field '$g' is set to false]"))
       }
       val thenPresentRules = dep.thens.map { t =>
         Rule(t, RuleIds.IfThenPresent,
           active && !guardTrue && perlTruthy(raw(t)),
-          lit(s"[field '$t' should not be completed if field '$g' is set to false]"),
-          " ", "")
+          lit(s"[field '$t' should not be completed if field '$g' is set to false]"))
       }
       // emission order matches the reference: guard, then-valid, else-absent
       // when true; else-valid, then-absent when false (459-489)
@@ -335,8 +326,7 @@ object ChecklistCompiler {
         concat(
           lit(s"[exactly one field out of ${quoted(grp.fields)} should be completed (found "),
           nc.cast(StringType),
-          lit(") and not 'unknown']")),
-        " ", "")
+          lit(") and not 'unknown']")))
     }
 
     val someOfRules: Seq[Rule] = checklist.dependencies.someOf.map { grp =>
@@ -345,8 +335,7 @@ object ChecklistCompiler {
       // message text (Validator.pm:325-326) — kept for fidelity.
       Rule(grp.fields.mkString(","), RuleIds.SomeOf,
         groupActive(nc, nu, no, nt) && nc < 1,
-        lit(s"[at least one field out of ${quoted(grp.fields)}should be completed and not 'unknown']"),
-        " ", "")
+        lit(s"[at least one field out of ${quoted(grp.fields)}should be completed and not 'unknown']"))
     }
 
     Compiled(checklist, states, fieldRules ++ ifRules ++ oneOfRules ++ someOfRules)

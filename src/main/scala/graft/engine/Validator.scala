@@ -19,8 +19,10 @@ import graft.model.Checklist
  * `content_sha256` (the per-row identity invariant generalizing the
  * reference's whole-file MD5, Reader.pm:86-88, per BASELINE.json input_hint).
  *
- * No shuffle is introduced: the projection is whole-stage-codegen'd and
- * pipelined with the scan; filters/pruning still push down past it.
+ * No shuffle is introduced: the projection is pipelined with the scan;
+ * filters/pruning still push down past it. The projection is stateless,
+ * so the same call validates a streaming DataFrame (`readStream` in,
+ * `writeStream` out) when `rowIdCol` names its key.
  */
 object Validator {
 
@@ -47,6 +49,10 @@ object Validator {
     val withId: DataFrame = opts.rowIdCol match {
       case Some(c) => df.withColumn(RowId, col(c))
       case None =>
+        require(!df.isStreaming,
+          "rowIdCol=None numbers rows in input order, which a stream does " +
+            "not have. Pass Options(rowIdCol = Some(<key>)) to validate a " +
+            "streaming DataFrame.")
         // 1-based input-order row number, matching the reference's row
         // numbering (Validator.pm:140). zipWithIndex keeps partition-local
         // counting + a tiny driver-side offset scan — no global shuffle —
@@ -72,7 +78,6 @@ object Validator {
           schema.add(RowId, "long", nullable = false))
     }
 
-    val violations = compiled.violations
     // per-row identity via the Sha256Hex kernel: value-identical to
     // sha2(.., 256) but without the per-row MessageDigest.getInstance —
     // sha runs on EVERY validated row, so its allocations set the
@@ -80,11 +85,14 @@ object Validator {
     val shaCols: Seq[Column] = opts.contentCol.toSeq.map(c =>
       graft.functions.Sha256Hex.column(col(c).cast(StringType)).as(ShaCol))
 
+    // the rules are evaluated once, into the violations array; the
+    // verdict and the error string are read from that array
     withId.select(
       (withId.columns.map(col).toSeq :+
-        violations.as(ViolationsCol)) ++ shaCols: _*)
+        compiled.violations.as(ViolationsCol)) ++ shaCols: _*)
       .withColumn(PassedCol, size(col(ViolationsCol)) === 0)
-      .withColumn(ErrorCol, compiled.errorString(col(RowId)))
+      .withColumn(ErrorCol,
+        ChecklistCompiler.errorString(col(ViolationsCol), col(RowId)))
   }
 
   /** Exploded structured violation rows `(row_id, field, rule_id, message)`

@@ -62,14 +62,19 @@ object Curation {
       .otherwise(round(lit(1.0) -
         size(array_distinct(l)).cast("double") / size(l), 6))
 
-  private def dupLineCharFracOf(l: Column): Column = {
+  /** Fraction of CHARACTERS sitting in repeated lines: 1 - chars of the
+   * distinct line set / total chars across lines. */
+  private def dupCharFracOf(l: Column): Column = {
     val total = aggregate(l, lit(0L), (acc, x) => acc + length(x))
     val dist = aggregate(array_distinct(l), lit(0L), (acc, x) => acc + length(x))
     when(total <= 0, lit(0.0))
       .otherwise(round(lit(1.0) - dist.cast("double") / total, 6))
   }
 
-  private def topNgramFracOf(ng: Column): Column = {
+  /** Fraction of n-gram slots taken by the single most frequent n-gram
+   * (the "top n-gram coverage" boilerplate signal): sort + one linear
+   * run-length pass. */
+  private def modalNgramFracOf(ng: Column): Column = {
     val best = aggregate(
       array_sort(ng),
       struct(lit("").as("prev"), lit(0).as("run"), lit(0).as("best")),
@@ -94,18 +99,6 @@ object Curation {
     when(text.isNull, lit(0.0))
       .otherwise(bind1(split(text, "\n"))(dupLineFracOf))
 
-  /** Fraction of CHARACTERS sitting in repeated lines: 1 - chars of the
-   * distinct line set / total chars across lines. */
-  def dupLineCharFrac(text: Column): Column =
-    when(text.isNull, lit(0.0))
-      .otherwise(bind1(split(text, "\n"))(dupLineCharFracOf))
-
-  /** Fraction of word-n-gram slots taken by the single most frequent
-   * n-gram (the "top n-gram coverage" boilerplate signal). Computed
-   * per row with sort + one linear run-length pass — no shuffle. */
-  def topNgramFrac(text: Column, n: Int): Column =
-    bind1(wordNgrams(text, n))(topNgramFracOf)
-
   /** Fraction of word-n-gram occurrences that are repeats of an earlier
    * one: 1 - distinct/total. */
   def dupNgramFrac(text: Column, n: Int): Column =
@@ -127,8 +120,8 @@ object Curation {
       .select(col(idCol),
         coalesce(size(col("__lines")), lit(0)).as("n_lines"),
         coalesce(dupLineFracOf(col("__lines")), lit(0.0)).as("dup_line_frac"),
-        coalesce(dupLineCharFracOf(col("__lines")), lit(0.0)).as("dup_line_char_frac"),
-        topNgramFracOf(col("__bg")).as("top_bigram_frac"),
+        coalesce(dupCharFracOf(col("__lines")), lit(0.0)).as("dup_line_char_frac"),
+        modalNgramFracOf(col("__bg")).as("top_bigram_frac"),
         dupNgramFracOf(col("__g5")).as("dup_5gram_frac"))
   }
 

@@ -563,15 +563,6 @@ object Multimodal {
   def metadata(assets: Dataset[Asset]): DataFrame =
     assets.toDF().select("asset_id", "modality", "mime", "n_bytes", "sha256")
 
-  /** Frame-sample plan for video assets: deterministic frame indices at a
-   * fixed stride — the shape of the real op; indices are computable from
-   * metadata alone (duration from the decode pass). */
-  def frameSamplePlan(features: Dataset[AssetFeatures], everyMs: Long): DataFrame =
-    features.toDF()
-      .filter(col("modality") === "video")
-      .select(col("asset_id"),
-        sequence(lit(0L), col("duration_ms"), lit(everyMs)).as("frame_times_ms"))
-
   /**
    * Per-partition batched resize: REAL decode-scale-reencode for
    * `image/png` payloads ([[Codec.resizePng]]); for modalities without a

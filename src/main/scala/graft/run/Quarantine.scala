@@ -85,10 +85,8 @@ object Quarantine {
       if (quarantinePartitionCols.nonEmpty) quarantinePartitionCols
       else SnapshotTable.snapshot(spark, root).partitionCols
     val (tSnap, deleted) =
-      if (mor) SnapshotTable.deleteWhereMoR(spark, root,
-        size(compiled.violations) > 0)
-      else SnapshotTable.deleteWhere(spark, root,
-        size(compiled.violations) > 0)
+      if (mor) SnapshotTable.deleteWhereMoR(spark, root, !compiled.passed)
+      else SnapshotTable.deleteWhere(spark, root, !compiled.passed)
     val qVersion = SnapshotTable.currentVersion(spark, quarantineRoot)
       .getOrElse(0).toLong
     // rowCountOrScan, not rowCount: the table may carry pending EQUALITY
@@ -132,7 +130,7 @@ object Quarantine {
     val body = if (corrected.columns.contains(ErrorCol))
       corrected.drop(ErrorCol) else corrected
     val compiled = ChecklistCompiler.compile(checklist)
-    val stillBad = body.filter(size(compiled.violations) > 0)
+    val stillBad = body.filter(!compiled.passed)
       .select(keyCols.map(col) :+
         compiled.errorString(concat_ws("/", keyCols.map(col): _*)).as(ErrorCol): _*)
       .limit(3).collect()

@@ -2,14 +2,12 @@ package graft.sources
 
 import scala.io.Source
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 /**
- * Loaders for the reference's lookup/dimension file formats. Each has two
- * forms: a driver-side set load (for broadcast-set predicates — the
- * reference's own winning design, Plugin/Ontology.pm:63-69) and a
- * DataFrame form (for dimension tables / broadcast joins at scale).
+ * Driver-side loaders for the reference's lookup file formats: each
+ * returns an in-memory set or map for the compiled membership predicates
+ * (the reference's own winning design, Plugin/Ontology.pm:63-69; sets
+ * above [[graft.compile.ChecklistCompiler.LargeSetThreshold]] ship as a
+ * broadcast).
  */
 object LookupSources {
 
@@ -20,12 +18,6 @@ object LookupSources {
     try src.getLines().collect { case l if l.startsWith("id: ") => l.drop(4) }.toSet
     finally src.close()
   }
-
-  /** OBO as a dimension DataFrame (distributed read for big ontologies). */
-  def oboDim(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-      .select(regexp_extract(col("value"), "^id: (.*)", 1).as("term"))
-      .filter(col("term") =!= "")
 
   private val NamesRe =
     """^(\d+)\t\|\t(.*?)\t\|(.*?)\t\|\t(.*?)\t\|?$""".r
@@ -43,38 +35,5 @@ object LookupSources {
       }.toSeq
       (pairs.toMap, pairs.map(_.swap).toMap)
     } finally src.close()
-  }
-
-  /** names.dmp as a dimension DataFrame (tax_id, name), scientific names
-   * only — the distributed form for big taxonomies. */
-  def taxonomyDim(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-      .select(
-        regexp_extract(col("value"), "^(\\d+)\t\\|\t", 1).as("tax_id"),
-        regexp_extract(col("value"), "^\\d+\t\\|\t(.*?)\t\\|", 1).as("name"),
-        col("value"))
-      .filter(col("value").rlike("\t\\|\tscientific name\t"))
-      .select(col("tax_id").cast("long").as("tax_id"), col("name"))
-
-  /** nodes.dmp rows: (tax_id, parent_tax_id, rank)
-   * (reference: TaxTree.pm:126-136). */
-  def nodes(path: String): Seq[(Long, Long, String)] = {
-    val src = Source.fromFile(path, "UTF-8")
-    try src.getLines().map { l =>
-      val f = l.stripSuffix("\t|").split("\t\\|\t", -1)
-      (f(0).toLong, f(1).toLong, f(2))
-    }.toSeq
-    finally src.close()
-  }
-
-  /** names.dmp scientific names keyed by tax id (driver-side, for TaxTree). */
-  def scientificNames(path: String): Map[Long, String] = {
-    val src = Source.fromFile(path, "UTF-8")
-    try src.getLines().flatMap {
-      case NamesRe(id, name, _, cls) if cls.trim == "scientific name" =>
-        Some(id.toLong -> name)
-      case _ => None
-    }.toMap
-    finally src.close()
   }
 }

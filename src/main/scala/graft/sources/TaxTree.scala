@@ -49,9 +49,6 @@ object TaxTree {
     Tree(root, ns, order.toSeq)
   }
 
-  def fromFiles(namesPath: String, nodesPath: String): Tree =
-    build(LookupSources.nodes(nodesPath), LookupSources.scientificNames(namesPath))
-
   /** (tax_id, name, lft, rgt, parent_tax_id) rows, DFS order or tax-id
    * (file) order (reference: TaxTree.pm:253-289). */
   def nodeValues(tree: Tree, dfs: Boolean = false): Seq[(Long, String, Long, Long, Long)] = {

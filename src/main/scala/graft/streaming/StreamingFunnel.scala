@@ -86,13 +86,15 @@ object StreamingFunnel {
       .map(delay => events.withWatermark(tsCol, delay)).getOrElse(events)
     // the state key is a primitive long: filter on the POST-cast value so
     // a non-numeric user id (e.g. "u123") is dropped like a NULL instead
-    // of casting to NULL and exploding inside the non-nullable StepEvent
-    // encoder — the numeric-key restriction of this streaming form (batch
-    // funnelLevels groups on any key type; pre-map ids upstream for parity)
+    // of exploding inside the non-nullable StepEvent encoder — the
+    // numeric-key restriction of this streaming form (batch funnelLevels
+    // groups on any key type; pre-map ids upstream for parity). try_cast,
+    // not cast: under ANSI mode a plain cast throws on "u123".
+    val user = col(userCol).try_cast("long")
     val stepRows = src
-      .filter(col(tsCol).isNotNull && col(userCol).cast("long").isNotNull &&
+      .filter(col(tsCol).isNotNull && user.isNotNull &&
         graft.ops.EventAnalytics.stepFilter(typeCol, steps))
-      .select(col(userCol).cast("long").as("user"),
+      .select(user.as("user"),
         unix_micros(col(tsCol).cast("timestamp")).as("us"),
         graft.ops.EventAnalytics.stepIndexCol(typeCol, steps).as("step"),
         // plain alias when already TIMESTAMP — a Cast node would strip
@@ -135,10 +137,15 @@ object StreamingFunnel {
             // A never-anchored user stores nothing (absent == all-empty).
             if (slots.exists(_ != -1L)) {
               state.update(FunnelState(slots))
-              // any state implies an anchor (slot 1 gates every later slot)
+              // any state implies an anchor (slot 1 gates every later slot).
+              // A timeout below the current watermark throws, and the
+              // watermark may already have passed anchor + window when a
+              // user's next event arrives: then time out on the next
+              // watermark advance instead.
               if (timeoutMode == GroupStateTimeout.EventTimeTimeout)
-                state.setTimeoutTimestamp(
-                  slots(0) / 1000L + windowSeconds * 1000L + 1L)
+                state.setTimeoutTimestamp(math.max(
+                  slots(0) / 1000L + windowSeconds * 1000L + 1L,
+                  state.getCurrentWatermarkMs() + 1L))
             }
             out.iterator
           }

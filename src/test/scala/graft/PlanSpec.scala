@@ -26,6 +26,16 @@ class PlanSpec extends SparkSuite {
     assert(!plan.contains("Exchange"), s"validation must not shuffle:\n$plan")
     // codegen'd stages render as "*(n) Operator" in the physical plan
     assert(plan.contains("*(") , "validation must be codegen'd")
+    // each rule is evaluated once per row: the error string reads the
+    // projected violations array instead of re-planning every rule
+    val formatted = v.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    val messages = Seq("'doc_id' is a required field]", "'text' is a required field]") ++
+      Seq("doc_id", "text", "source", "n_chars").map(f => s"[value in field '$f' is not valid]")
+    messages.foreach { m =>
+      assert(formatted.split(java.util.regex.Pattern.quote(m), -1).length - 1 === 1,
+        s"rule message $m must be planned once:\n$formatted")
+    }
   }
 
   test("validation + violation explode still shuffle-free") {

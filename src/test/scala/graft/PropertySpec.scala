@@ -211,9 +211,10 @@ class PropertySpec extends SparkSuite {
         rows.map(r => org.apache.spark.sql.Row.fromSeq(cl.fieldNames.map(r))), 4)
       val df = spark.createDataFrame(rdd, schema)
 
-      val got = Validator.validate(df, cl)
-        .select(Validator.RowId, Validator.ViolationsCol)
+      val collected = Validator.validate(df, cl)
+        .select(Validator.RowId, Validator.ViolationsCol, Validator.ErrorCol)
         .collect()
+      val got = collected
         .map(r => r.getLong(0) ->
           r.getSeq[org.apache.spark.sql.Row](1).map(v => (v.getString(0), v.getString(1))))
         .toMap
@@ -222,6 +223,17 @@ class PropertySpec extends SparkSuite {
         val want = oracle(row)
         assert(got(i + 1L) === want,
           s"round $round row ${i + 1}: cells=${cl.fieldNames.map(row).mkString("|")}")
+      }
+      // the error column is the reference's accumulation of the row's
+      // violation messages: field-level messages carry a trailing space,
+      // dependency messages a leading one, then trim and prefix
+      collected.foreach { r =>
+        val msgs = r.getSeq[org.apache.spark.sql.Row](1).map(v => (v.getString(1), v.getString(2)))
+        val acc = msgs.map { case (rule, m) =>
+          if (rule == RuleIds.Required || rule == RuleIds.FieldInvalid) m + " " else " " + m
+        }.mkString.trim
+        val want = if (acc.isEmpty) null else s"[errors found on row ${r.getLong(0)}] $acc"
+        assert(r.getString(2) === want, s"round $round row ${r.getLong(0)}")
       }
     }
   }

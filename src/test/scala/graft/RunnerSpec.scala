@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.model._
 import graft.model.FieldType._
 import graft.run.CheckpointRunner
+import graft.engine.Validator
 import graft.sources.CodeFiles
-import graft.streaming.StreamingValidator
 
 class RunnerSpec extends SparkSuite {
   import spark.implicits._
@@ -163,15 +163,32 @@ class RunnerSpec extends SparkSuite {
     val dir = Files.createTempDirectory("graft_stream").toString + "/data"
     batch.write.parquet(dir)
     val stream = spark.readStream.schema(batch.schema).parquet(dir)
-    val validated = StreamingValidator.validateStream(stream, cl, "k")
+    // the batch entry point validates the stream as-is, keyed on k
+    val validated = Validator.validate(stream, cl,
+      Validator.Options(rowIdCol = Some("k")))
     val q = validated.writeStream.format("memory").queryName("sv")
       .outputMode("append").start()
+    val qv = Validator.violationRows(validated).writeStream.format("memory")
+      .queryName("svv").outputMode("append").start()
     try {
       q.processAllAvailable()
+      qv.processAllAvailable()
       val got = spark.sql("select k, passed from sv").collect()
         .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
       assert(got === Map(1L -> true, 2L -> false, 3L -> false))
-    } finally q.stop()
+      val viol = spark.sql("select row_id, field, rule_id from svv").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+      assert(viol === Set((2L, "v", RuleIds.FieldInvalid), (3L, "v", RuleIds.Required)))
+    } finally { q.stop(); qv.stop() }
+  }
+
+  test("streaming validation without a row key fails at once, naming the fix") {
+    val cl = Checklist("s", Seq(FieldDef("v", StrT(), required = true)))
+    val dir = Files.createTempDirectory("graft_stream_nokey").toString + "/data"
+    Seq("a").toDF("v").write.parquet(dir)
+    val stream = spark.readStream.schema("v string").parquet(dir)
+    val e = intercept[IllegalArgumentException](Validator.validate(stream, cl))
+    assert(e.getMessage.contains("rowIdCol = Some(<key>)"), e.getMessage)
   }
 
   test("curation metrics run unchanged on a stream (stateless projection)") {

@@ -116,4 +116,48 @@ class StreamingFunnelSpec extends SparkSuite {
         7200L, evictionWatermark = Some("0 seconds"))
     }
   }
+
+  test("evictionWatermark: a user's next event after the watermark passed " +
+      "anchor + window re-arms the timeout instead of failing the query") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // With data arriving in every trigger no idle batch runs between two
+    // data batches, so u1's state is still there when its next event comes
+    // in a batch whose watermark (13:00, from b1) is already past u1's
+    // anchor + window (12:00). Idle batches are switched off to make that
+    // ordering deterministic.
+    val b1 = Seq((1L, ts("2024-01-01 10:00:00"), "A"),
+      (9L, ts("2024-01-01 13:00:00"), "B"))
+    val b2 = Seq((1L, ts("2024-01-01 13:30:00"), "B")) // outside the window
+    val b3 = Seq((9L, ts("2024-01-01 14:00:00"), "B")) // watermark 13:30: u1 evicts
+    val b4 = Seq((1L, ts("2024-01-01 15:00:00"), "A")) // fresh anchor
+    val in = MemoryStream[(Long, Timestamp, String)]
+    val hits = StreamingFunnel.levels(
+      in.toDS().toDF("user_id", "ts", "event_type"),
+      "user_id", "ts", "event_type", steps, windowSeconds = 7200L,
+      evictionWatermark = Some("0 seconds"))
+    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(key, "false")
+    try {
+      val q = hits.writeStream.format("memory").queryName("sf4")
+        .outputMode("append").start()
+      try {
+        Seq(b1, b2, b3, b4).foreach { b => in.addData(b: _*); q.processAllAvailable() }
+        val got = spark.sql("select user, level from sf4").collect()
+          .map(r => (r.getLong(0), r.getInt(1)))
+        assert(got.sorted.toSeq === Seq((1L, 1), (1L, 1)), s"got ${got.toSeq}")
+      } finally q.stop()
+    } finally spark.conf.unset(key)
+  }
+
+  test("non-numeric user ids are dropped like NULLs under ANSI casts") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val events = Seq(("1", ts("2024-01-01 10:00:00"), "A"),
+      ("u123", ts("2024-01-01 10:01:00"), "A"),
+      ("1", ts("2024-01-01 10:02:00"), "B"))
+      .toDF("user_id", "ts", "event_type")
+    val got = StreamingFunnel.levels(events, "user_id", "ts", "event_type",
+      steps, 7200L).collect().map(h => (h.user, h.level)).toSet
+    assert(got === Set((1L, 1), (1L, 2)))
+  }
 }

@@ -303,6 +303,11 @@ class ValidatorSpec extends SparkSuite {
     assert(errs(5L).matches(raw".*\[exactly one field out of 'three'.*?found 3.*?]$$"))
     assert(errs(2L) ===
       "[errors found on row 2] [exactly one field out of 'one', 'two' should be completed (found 2) and not 'unknown']")
+    // exact bytes at the field/dependency boundary: the field message's
+    // trailing space plus the dependency message's leading space leave the
+    // reference's double space (Validator.pm:136-145)
+    assert(errs(3L) === "[errors found on row 3] ['one' is a required field]  " +
+      "[exactly one field out of 'one', 'two' should be completed (found 0) and not 'unknown']")
   }
 
   test("06: some_of groups - 2 invalid rows incl. reference's missing-space message") {
@@ -322,6 +327,9 @@ class ValidatorSpec extends SparkSuite {
     assert(errs(4L) === "[errors found on row 4] ['one' is a required field]")
     // exact some_of message with the reference's missing space (Validator.pm:325-326)
     assert(errs(3L).endsWith("[at least one field out of 'one', 'two'should be completed and not 'unknown']"))
+    // exact bytes, including the double space at the field/dependency boundary
+    assert(errs(3L) === "[errors found on row 3] ['one' is a required field]  " +
+      "[at least one field out of 'one', 'two'should be completed and not 'unknown']")
   }
 
   // --- t/09_unknown.t: tri-state unknown handling --------------------------
